@@ -47,7 +47,7 @@ SKIP: set[str] = set()
 # 67-query JSON line ran 2044 chars and lost its head, so the artifact
 # failed to parse. Keep the line safely under the window: compact
 # separators, 2-decimal timings, and — only if still too long — fold
-# the last-registered (lowest-priority) entries into one "_folded"
+# the entries at the end of registry order into one "_folded"
 # aggregate, regardless of their cost.
 LINE_BUDGET = 1900
 
@@ -687,7 +687,7 @@ def encode_line(
     assert FOLD_KEY not in timings, f"registry entry shadows {FOLD_KEY!r}"
     qs = dict(timings)
     line = dump(qs)
-    # fold the LAST-registered (lowest-priority) entries first; their
+    # fold the entries at the end of registry order first; their
     # time still counts in "value" via the untouched `timings` sum
     fold_order = list(reversed(list(timings)))
     folded = 0.0
@@ -735,9 +735,9 @@ def main() -> None:
     nation.mapInPandas(lambda it: it, schema=nation.schema).write.format(
         "noop"
     ).mode("overwrite").save()
-    # iterate in registry-priority order (load_suite() puts the
-    # driver-checked core first) so encode_line's fold-from-the-end
-    # sacrifices the deprioritized twins, never a core entry
+    # iterate in registry order (load_suite() puts the entries the
+    # driver checks this round first), so encode_line's
+    # fold-from-the-end sacrifices the most recently green entries
     timings: dict[str, float] = {}
     details: dict[str, dict] = {}
 

@@ -74,6 +74,10 @@ class PipelineExecutor:
 
         raw = raw.withColumn("article_index", md5_long(F.col("se_link")))
         raw.write.mode("overwrite").parquet(raw_path)  # S2
+        # clean the stored raw table, not the lazy plan: re-running the
+        # plan would fetch every page a second time, and a page that
+        # changed or failed in between would make the two tables differ
+        raw = self.spark.read.parquet(raw_path)
         clean = clean_articles(raw.drop("pos", "bs_link", "n3k_link"))
         clean.write.mode("overwrite").parquet(clean_path)  # S3
         return self.spark.read.parquet(clean_path)

@@ -14,8 +14,8 @@ Reference behaviors kept: Google ``tbs=cdr`` date-range params and
 pnnext pagination (link_extractor.py:145-155,214-220), Bing's
 page-hash stall detection + offset hard cap (:299,:317-324), Yahoo's
 ``RU=(.+)/RK`` link de-obfuscation (:450), per-engine max_articles
-truncation (L1), last-wins dedup by se_link (S7, :558 — we keep
-dropDuplicates' arbitrary-row semantics, documented deviation).
+truncation (L1), last-wins dedup by se_link in engine order (S7,
+:558).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import time
 import urllib.parse
 import urllib.request
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor, as_completed
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
@@ -226,17 +226,13 @@ def get_all_links(
     max_articles: int = 100,
     **kw,
 ) -> DataFrame:
-    """S7: thread-pool fan-out over engines, flatten, DataFrame-ize,
-    dedup by se_link (dropDuplicates keeps an arbitrary row; the
-    reference kept the last — documented deviation, SURVEY S7)."""
-    rows: list[dict] = []
+    """S7: thread-pool fan-out over engines, flatten in ``sources``
+    order, dedup by se_link keeping the last occurrence (the
+    reference's ``keep='last'``), then DataFrame-ize. The rows are
+    already on the driver, so the dedup is a dict, not a shuffle."""
     with ThreadPoolExecutor(max_workers=max(1, len(sources))) as pool:
         futs = [
             pool.submit(s.get_links, query, max_articles, **kw) for s in sources
         ]
-        for f in as_completed(futs):
-            rows.extend(f.result())
-    df = spark.createDataFrame(rows, schema=LINKS_SCHEMA) if rows else (
-        spark.createDataFrame([], schema=LINKS_SCHEMA)
-    )
-    return df.dropDuplicates(["se_link"])
+        last = {r["se_link"]: r for f in futs for r in f.result()}
+    return spark.createDataFrame(list(last.values()), schema=LINKS_SCHEMA)

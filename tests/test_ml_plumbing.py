@@ -701,3 +701,44 @@ def test_wizard_witnesses_vacuous_on_empty(spark):
         "topics_top5_sorted": 1.0,
         "total_size": 0.0,
     }
+
+
+@pytest.mark.parametrize("dim", [8, 16])
+def test_hash_embeddings_long_runs_in_last_bucket(spark, dim):
+    """128 copies of one token in bucket dim-1 used to carry into the
+    sign bit of the packed accumulator and raise ARITHMETIC_OVERFLOW
+    under ANSI; dim > 8 used to raise at build time. Every row must
+    equal the exact signed bucket counts, normalized and floored to 6
+    places like the kernel does, whichever path it takes."""
+    import hashlib
+    import math
+
+    from miba_2023_capstone_rb_nlp_spark.ml.embeddings import hash_embeddings
+
+    def h60(tok: str) -> int:
+        return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+
+    def expected(toks: list[str]) -> list[float]:
+        sums = [0] * dim
+        for t in toks:
+            h = h60(t)
+            sums[h % dim] += 1 if (h >> 10) & 1 else -1
+        norm = math.sqrt(sum(float(v) * v for v in sums))
+        return [math.floor(v / norm * 1e6) / 1e6 for v in sums]
+
+    last = next(f"tok{i}" for i in range(10_000) if h60(f"tok{i}") % dim == dim - 1)
+    other = next(f"tok{i}" for i in range(10_000) if h60(f"tok{i}") % dim == 0)
+    docs = {
+        127: [last] * 127,  # packed path at dim 8
+        128: [last] * 128,  # first length on the fold path
+        255: [last] * 255,
+        300: [last] * 200 + [other] * 100,
+    }
+    df = spark.createDataFrame(
+        [(k, " ".join(v)) for k, v in docs.items()], "id int, text string"
+    )
+    got = {
+        r["id"]: r["hash_embedding"]
+        for r in hash_embeddings(df, "text", "id", dim=dim).collect()
+    }
+    assert got == {k: expected(v) for k, v in docs.items()}

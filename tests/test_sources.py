@@ -4,8 +4,12 @@ PipelineExecutor with cache short-circuit."""
 
 from __future__ import annotations
 
+import collections
 import contextlib
+import http.server
 import pathlib
+import threading
+import time
 
 import pytest
 
@@ -120,13 +124,32 @@ def test_date_param_conflict_raises():
 
 
 def test_get_all_links_union_dedup(spark):
-    g = GoogleNewsSource(fetcher=lambda url: GOOGLE_PAGE, polite=False)
-    b = BingNewsSource(fetcher=lambda url: BING_PAGE, polite=False)
-    df = get_all_links(spark, [g, b], "q", max_articles=10)
-    rows = df.collect()
-    assert {r["se_link"] for r in rows} == {
-        "https://ex.com/a1", "https://ex.com/a2", "https://ex.com/b1",
-    }
+    def fetcher(engine, page, slow):
+        def fetch(url):
+            if engine == slow:
+                time.sleep(0.5)  # answers after the other engine
+            return page
+
+        return fetch
+
+    for slow in ("Google", "Bing"):
+        g = GoogleNewsSource(
+            fetcher=fetcher("Google", GOOGLE_PAGE, slow), polite=False
+        )
+        b = BingNewsSource(
+            fetcher=fetcher(
+                "Bing", BING_PAGE.replace("ex.com/b1", "ex.com/a2"), slow
+            ),
+            polite=False,
+        )
+        df = get_all_links(spark, [g, b], "q", max_articles=10)
+        rows = {r["se_link"]: r for r in df.collect()}
+        assert set(rows) == {"https://ex.com/a1", "https://ex.com/a2"}
+        # a link both engines list keeps the later source's row,
+        # whichever engine answered first
+        assert rows["https://ex.com/a2"]["engine"] == "Bing", slow
+        assert rows["https://ex.com/a2"]["se_title"] == "Bing headline"
+        assert rows["https://ex.com/a1"]["engine"] == "Google"
 
 
 def test_dominant_block_extraction():
@@ -207,6 +230,43 @@ def test_pipeline_executor_end_to_end(spark, article_files, tmp_path):
     # cache probe short-circuits (S1): second call reads parquet
     again = ex.execute("integration test", max_articles=10)
     assert again.count() == len(rows)
+
+
+def test_pipeline_executor_fetches_each_page_once(spark, tmp_path):
+    """One GET per unique link: the clean table is built from the
+    stored raw table, not by re-running the fetch."""
+    gets: collections.Counter[str] = collections.Counter()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            gets[self.path] += 1
+            i = int(self.path.removeprefix("/article").removesuffix(".html"))
+            body = _mk_article(i).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "text/html")
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        base = f"http://127.0.0.1:{server.server_port}"
+        urls = [f"{base}/article{i}.html" for i in range(4)]
+        ex = PipelineExecutor(
+            spark,
+            data_dir=str(tmp_path / "data"),
+            # the second source repeats two links of the first
+            sources=[FileSource(urls[:3]), FileSource(urls[1:])],
+        )
+        assert ex.execute("one fetch", max_articles=10, overwrite=True).count() > 0
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert dict(gets) == {f"/article{i}.html": 1 for i in range(4)}
 
 
 def test_sanitize_query():

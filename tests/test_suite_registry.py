@@ -1,17 +1,19 @@
 """The suite registry is a driver contract: a silent import failure
-or an accidental re-ordering shrinks the correctness gate without any
-test failing — so both the exact membership and the priority order
-are pinned here."""
+shrinks the correctness gate, and a bad order starves entries of
+driver checks, without any other test failing — so the exact
+membership and the invariants of the computed order are pinned here."""
 
 from __future__ import annotations
 
 import builtins
+import math
 
 import pytest
 
 from miba_2023_capstone_rb_nlp_spark.suite import (
-    _DEPRIORITIZED,
-    _PRIORITIZED,
+    REGISTRY,
+    _correctness_artifacts,
+    _driver_order,
     load_suite,
 )
 
@@ -194,347 +196,83 @@ def test_suite_membership_exact():
     assert len(suite) == len(EXPECTED)
 
 
-def test_priority_ordering():
+DRIVER_WINDOW = 50  # entries the external driver checks per round
+FLAGSHIP = "cluster_viz_summary"
+
+
+def _last_green(artifacts: dict[int, dict[str, dict]]) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for rnd, rows in artifacts.items():
+        for name, row in rows.items():
+            if row["hash_match"] and row["rows_match"] and row["schema_match"]:
+                out[name] = max(rnd, out.get(name, 0))
+    return out
+
+
+def _green_row() -> dict:
+    return {"hash_match": True, "rows_match": True, "schema_match": True}
+
+
+def test_flagship_always_first():
     names = list(load_suite())
-    assert names[: len(_PRIORITIZED)] == list(_PRIORITIZED)
-    assert names[-len(_DEPRIORITIZED):] == list(_DEPRIORITIZED)
+    assert names[0] == FLAGSHIP
+    # whatever the artifacts say, including a flagship that is stale
+    artifacts = {1: {n: _green_row() for n in names if n != FLAGSHIP}}
+    assert _driver_order(names[::-1], artifacts)[0] == FLAGSHIP
+    assert _driver_order(names[::-1], {})[0] == FLAGSHIP
 
 
-# Every SURVEY §2 operator's CANONICAL suite entry. The external
-# driver records correctness for exactly the first 50 registry rows,
-# so these must all sit inside that window — round 2 lost 7 of them
-# to silent eviction (VERDICT r2 "What's wrong" #2). Entries NOT here
-# are engine-addition twins whose machinery an in-window sibling
-# re-proves (see _DEPRIORITIZED comments).
-#
-# ROTATION (VERDICT r4 #1): core entries may be temporarily demoted —
-# listed in ROTATED_OUT below — to let never-driver-checked entries
-# earn evidence. test_rotated_out_entries_have_driver_evidence makes
-# the precondition executable: only entries hash-green in ≥2 prior
-# CORRECTNESS_r*.json rounds may rotate out.
-DRIVER_WINDOW = 50
-ROTATED_OUT = {
-    # ============ round-14 state (VERDICT r13 next-round #1) ======
-    # The r13 window went 50/50 hash-green (eighth consecutive
-    # fully-green round), so every r13-green entry except the
-    # flagship rotated out via clause (a); the window now holds the
-    # R14 slate (the 5 r10-cohort leftovers first — the registry's
-    # only pre-r11 driver evidence — then the clause-(b) witness trio
-    # owed their 2nd solo green, then the first 41 of the r12-demoted
-    # cohort). The sets below are the CURRENT demotions (history in
-    # git). Machinery siblings for each are named in
-    # suite/__init__.py's _DEPRIORITIZED comments.
-    # -- the r13 window, demoted in r14 (>=2 greens each: the 8
-    # -- r9-cohort returnees r9+r13, the 41 r10-cohort returnees
-    # -- r10+r13) --
-    "salted_agg_priority_revenue",
-    "events_tumbling_hourly",
-    "events_json_value_counts",
-    "knn_ivf_cells",
-    "embedding_neardup_pairs",
-    "source_vocab_overlap",
-    "events_type_pivot",
-    "incremental_revenue_merge",
-    "events_sliding_hourly",
-    "local_supplier_volume_q5",
-    "promo_revenue_q14",
-    "disjunctive_revenue_q19",
-    "part_triangle_counts",
-    "events_json_roundtrip",
-    "hybrid_rrf_search",
-    "orders_merge_steady",
-    "volume_shipping_q7",
-    "small_qty_revenue_q17",
-    "events_csv_roundtrip",
-    "waiting_suppliers_q21",
-    "min_cost_supplier_q2",
-    "excess_shipment_q20",
-    "idle_customers_q22",
-    "revenue_concentration_q11",
-    "events_orc_roundtrip",
-    "events_xml_roundtrip",
-    "hash_split_profile",
-    "temperature_resample",
-    "video_frame_sample",
-    "bigram_lm_perplexity",
-    "bigram_topk",
-    "bpe_encode_stats",
-    "brand_price_regression",
-    "doc_chunk_windows",
-    "dsir_importance_select",
-    "duplicate_span_flags",
-    "embedding_dim_stats",
-    "event_outliers_mad",
-    "events_asof_cogroup",
-    "events_funnel_stages",
-    "events_hourly_gapfill",
-    "events_stream_stream_join",
-    "events_streaming_upsert",
-    "fuzzy_name_matches",
-    "group_concat_docs",
-    "incremental_minhash_dedup",
-    "knn_int8_rerank",
-    "knn_ivf_pruned",
-    "line_dedup_rebuild",
-    # -- the r12 window, demoted in r13 (>=3 greens each: the r8
-    # -- cohort r1-r4/r8+r12, the r<=6+r9 first half r5/r6/r9+r12) --
-    "pricing_summary",
-    "region_revenue",
-    "order_priority_semijoin",
-    "nation_set_ops",
-    "order_window_enrich",
-    "argmax_per_flag",
-    "order_rollup_revenue",
-    "salted_join_nation_customers",
-    "price_quantiles",
-    "etl_clean_articles",
-    "explode_paragraphs",
-    "ner_top_orgs",
-    "media_features",
-    "events_session_windows",
-    "events_tumbling_streaming",
-    "doc_stats_quality",
-    "lang_id",
-    "top_terms_per_source",
-    "sentence_stats",
-    "lemma_term_counts",
-    "corpus_prep_chain",
-    "exact_dedup",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "neardup_components",
-    "knn_bruteforce",
-    "gopher_repetition_flags",
-    "pii_redaction",
-    "contamination_ngram_overlap",
-    "pairwise_medoids",
-    "sequence_packing",
-    "bpe_merge_learn",
-    "shipping_priority_q3",
-    "event_transition_matrix",
-    "events_value_ttest",
-    "events_cusum_changepoint",
-    "ctfidf_topics_per_lang",
-    "dedup_canonical_corpus",
-    "events_stateful_running",
-    "events_stream_dedup",
-    "hyperplane_lsh_pairs",
-    "data_quality_report",
-    "weekly_active_users",
-    "customers_without_orders",
-    "top_orders_per_customer",
-    "order_cube_revenue",
-    "customer_order_frames",
-    # -- the 5 r12-demoted backfill leftovers (greens r1-r4+r8+r11;
-    # -- promote in r15, right after wizard_full_chain) --
-    "sentiment_distinct_join",
-    "bpe_token_stats",
-    "bm25_topk",
-    "stratified_sample_docs",
-    "winnowing_fingerprints",
-}
-
-# Round-6 policy amendment, clause (b): an entry may also rotate out
-# if it was driver-green in the round IMMEDIATELY BEFORE its demotion
-# — the freshest evidence an entry can have (round 5 debuted 41
-# entries at once; the ≥2-green population alone cannot free enough
-# slots to rotate the r1/r2 tail back in). Maps entry → the round it
-# was demoted IN, so the executable precondition ("green in round
-# N-1") stays checkable forever, not just while N-1 is the latest
-# artifact. Rows-only entries (no oracle) satisfy it with a recorded
-# rows-only pass.
-ROTATED_OUT_FRESH = {
-    # wizard_full_chain's witness oracle (commit 5757eb4, mid-r11)
-    # earned its FIRST driver hash-green in r12 — one green round, so
-    # clause (a) cannot demote it; clause (b) can (green in the round
-    # immediately before its r13 demotion). Its witness battery stays
-    # mutation-tested in tests/test_ml_plumbing.py and its stage
-    # plans pinned in tests/test_plans.py. It returns in r15 at the
-    # head of the slate (the kmeans/pca/approx trio, demoted the same
-    # way in r12, returned on schedule in r14).
-    "wizard_full_chain": 13,
-}
-CORE_ENTRIES = {
-    "cluster_viz_summary",
-    "wizard_full_chain",
-    "pairwise_medoids",
-    "kmeans_clusters",
-    "pca_coords",
-    "embedding_dim_stats",
-    "hash_embeddings",
-    "sentiment_distinct_join",
-    "medoid_summaries",
-    "pricing_summary",
-    "region_revenue",
-    "order_priority_semijoin",
-    "nation_set_ops",
-    "order_window_enrich",
-    "argmax_per_flag",
-    "order_rollup_revenue",
-    "salted_join_nation_customers",
-    "price_quantiles",
-    "etl_clean_articles",
-    "explode_paragraphs",
-    "ner_top_orgs",
-    "media_features",
-    "events_session_windows",
-    "events_tumbling_streaming",
-    "events_stateful_running",
-    "events_asof_last_click",
-    "events_asof_cogroup",
-    "events_range_click_counts",
-    "doc_stats_quality",
-    "lang_id",
-    "top_terms_per_source",
-    "sentence_stats",
-    "bpe_token_stats",
-    "lemma_term_counts",
-    "stratified_sample_docs",
-    "winnowing_fingerprints",
-    "exact_dedup",
-    "ngram_jaccard_pairs",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "neardup_components",
-    "gopher_repetition_flags",
-    "pii_redaction",
-    "contamination_ngram_overlap",
-    "dedup_canonical_corpus",
-    "corpus_prep_chain",
-    "bm25_topk",
-    "sequence_packing",
-    "knn_bruteforce",
-    "hyperplane_lsh_pairs",
-    "knn_ivf_multiprobe",
-    "ctfidf_topics_per_lang",
-}
+def test_order_non_decreasing_in_last_green_round():
+    names = list(load_suite())
+    artifacts = _correctness_artifacts()
+    last = _last_green(artifacts)
+    rounds = [last.get(n, 0) for n in _driver_order(names, artifacts)[1:]]
+    assert rounds == sorted(rounds)
+    # a red latest row does not count: "a" was green in round 1 and
+    # failed in round 2, so it sorts ahead of "b", green in round 2
+    red = {"hash_match": False, "rows_match": True, "schema_match": True}
+    artifacts = {1: {"a": _green_row()}, 2: {"a": red, "b": _green_row()}}
+    assert _driver_order(["b", "a", FLAGSHIP], artifacts) == [FLAGSHIP, "a", "b"]
 
 
-def test_core_entries_inside_driver_window():
-    head = set(list(load_suite())[:DRIVER_WINDOW])
-    missing = (CORE_ENTRIES - ROTATED_OUT - set(ROTATED_OUT_FRESH)) - head
-    assert not missing, (
-        f"§2-core entries evicted from the driver's {DRIVER_WINDOW}-row "
-        f"checked window: {sorted(missing)} — adding a new entry requires "
-        "demoting a twin via _DEPRIORITIZED"
-    )
-    # entries that must sit in the window this round (the R14 slate,
-    # VERDICT r13 next-round #1)
-    promoted = {
-        # the 5 r10-cohort leftovers — the registry's only pre-r11
-        # driver evidence (last green r10), promoted FIRST...
-        "lineitem_unpivot_stats", "orders_merge_bucketed",
-        "orders_upsert_merge", "part_affinity_topk", "part_pagerank",
-        # ...the clause-(b) witness trio owed their 2nd solo green
-        # since the r12 demotion (single r11 green each)...
-        "kmeans_clusters", "pca_coords", "approx_distinct_parts",
-        # ...and the first 41 of the 46-entry r12-demoted cohort
-        # (last green r11), list order
-        "part_price_skyline", "phrase_match_docs",
-        "prefix_jaccard_pairs", "price_decile_histogram",
-        "quality_representative_dedup", "retention_cohorts",
-        "returned_items_q10", "sql_interface_segment_revenue",
-        "url_canonical_dedup", "user_decayed_value",
-        "wizard_chain_stages", "forecast_revenue_q6",
-        "market_share_q8", "product_profit_q9",
-        "late_shipment_priority_q12", "order_count_distribution_q13",
-        "top_supplier_q15", "supplier_part_counts_q16",
-        "large_volume_customers_q18", "semantic_dedup_cells",
-        "perplexity_bucket_filter", "countmin_heavy_hitters",
-        "custom_pysource_links", "events_stream_static_join",
-        "events_variant_extract", "trade_hops_recursive",
-        "top_customers_lateral", "doc_chunks_udtf", "doc_bytes_arrow",
-        "collated_lang_counts", "events_try_ops_safe",
-        "user_event_map_profile", "sql_udf_token_stats",
-        "hard_negative_mining", "source_kl_divergence",
-        "weighted_sample_docs", "events_asof_last_click",
-        "events_range_click_counts", "hash_embeddings",
-        "knn_ivf_multiprobe", "medoid_summaries",
+def test_every_entry_checked_within_freshness_bound():
+    """Simulate 20 rounds from the committed artifacts, each turning
+    the first DRIVER_WINDOW entries green. Every window of
+    ceil((N-1)/(W-1)) consecutive rounds checks every entry."""
+    names = list(load_suite())
+    artifacts = dict(_correctness_artifacts())
+    bound = math.ceil((len(names) - 1) / (DRIVER_WINDOW - 1))
+    first = max(artifacts) + 1
+    checked: dict[str, list[int]] = {n: [] for n in names}
+    for rnd in range(first, first + 20):
+        head = _driver_order(names, artifacts)[:DRIVER_WINDOW]
+        artifacts[rnd] = {n: _green_row() for n in head}
+        for n in head:
+            checked[n].append(rnd)
+    for start in range(first, first + 20 - bound + 1):
+        span = range(start, start + bound)
+        stale = [n for n, rs in checked.items() if not any(r in span for r in rs)]
+        assert not stale, f"unchecked in rounds {start}..{start + bound - 1}: {stale}"
+
+
+def test_committed_window_holds_stalest_entries():
+    names = list(load_suite())
+    head = _driver_order(names, _correctness_artifacts())[:DRIVER_WINDOW]
+    r11_stale = {
+        "bpe_token_stats",
+        "stratified_sample_docs",
+        "winnowing_fingerprints",
+        "bm25_topk",
+        "sentiment_distinct_join",
     }
-    assert promoted <= head, sorted(promoted - head)
+    assert r11_stale <= set(head)
 
 
-def _driver_green_rounds(name: str) -> int:
-    """How many CORRECTNESS_r*.json artifacts show this entry fully
-    hash-green."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    n = 0
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        e = rows.get(name)
-        if e and e.get("hash_match") and e.get("rows_match") and e.get("schema_match"):
-            n += 1
-    return n
-
-
-def _round_artifact(n: int) -> dict:
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
-def test_rotated_out_entries_have_driver_evidence():
-    """Rotation policy clause (a), executable: an entry may only be
-    rotation-demoted under clause (a) if the committed driver
-    artifacts show it hash-green in at least 2 prior rounds."""
-    for name in sorted(ROTATED_OUT):
-        assert _driver_green_rounds(name) >= 2, (
-            f"{name} rotated out with <2 rounds of driver-green "
-            "evidence — it must stay in the checked window"
-        )
-
-
-def test_fresh_rotations_were_green_the_round_before():
-    """Rotation policy clause (b), executable: an entry demoted in
-    round N with <2 green rounds must have been driver-green in round
-    N-1 — fully hash-green for oracled entries, a recorded rows-only
-    pass for entries that HAD no oracle in round N-1 (which could
-    never hash-match). The standard is what the entry WAS when the
-    evidence was recorded: the artifact row itself says so (err ==
-    "no_oracle"), so an entry oracled AFTER its demotion — as
-    wizard_full_chain was mid-r11 — still satisfies the clause with
-    its recorded rows-only pass."""
-    for name, demoted_in in sorted(ROTATED_OUT_FRESH.items()):
-        e = _round_artifact(demoted_in - 1).get(name)
-        assert e is not None, (
-            f"{name}: no round-{demoted_in - 1} driver row — clause "
-            "(b) demotion requires evidence from the prior round"
-        )
-        hash_green = bool(
-            e.get("hash_match")
-            and e.get("rows_match")
-            and e.get("schema_match")
-        )
-        rows_only_pass = (
-            e.get("err") == "no_oracle" and e.get("spark_rows") is not None
-        )
-        assert hash_green or rows_only_pass, (
-            f"{name}: round-{demoted_in - 1} row was not green: {e}"
-        )
-
-
-def test_rotation_sets_disjoint_and_actually_demoted():
-    """Clause (a) and (b) sets must not overlap, and every clause-(b)
-    entry must actually sit in the deprioritized tail."""
-    assert not (ROTATED_OUT & set(ROTATED_OUT_FRESH))
-    for name in ROTATED_OUT_FRESH:
-        assert name in _DEPRIORITIZED, name
+def test_no_artifacts_gives_flagship_then_registration_order():
+    load_suite()
+    names = list(REGISTRY)
+    rest = [n for n in names if n != FLAGSHIP]
+    assert _driver_order(names, {}) == [FLAGSHIP] + rest
 
 
 def test_rows_only_entries_pinned():
@@ -549,60 +287,6 @@ def test_rows_only_entries_pinned():
     suite = load_suite()
     no_oracle = {name for name, q in suite.items() if q.oracle is None}
     assert no_oracle == set()
-
-
-def test_demotion_comments_name_live_siblings():
-    """VERDICT r10 #8: every _DEPRIORITIZED entry's trailing comment
-    must point at machinery that still proves it — either a sibling
-    entry that currently sits inside the driver's checked window, or
-    an existing ``tests/<file>.py`` lane. Round 10 had to hand-fix 21
-    stale sibling references after the rotation (commit de0b06b);
-    this makes the audit executable so a future rotation fails fast
-    instead of silently invalidating the comments."""
-    import inspect
-    import os
-    import re
-
-    import miba_2023_capstone_rb_nlp_spark.suite as suite_mod
-
-    src = inspect.getsource(suite_mod)
-    block = src.split("_DEPRIORITIZED = (", 1)[1].split("\n)", 1)[0]
-    suite = load_suite()
-    head = set(list(suite)[:DRIVER_WINDOW])
-    all_names = set(suite)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked = 0
-    for line in block.splitlines():
-        m = re.match(r'\s*"([a-z0-9_]+)",\s*#\s*(.*)$', line)
-        if not m:
-            continue  # section-narration comment lines
-        name, comment = m.groups()
-        checked += 1
-        lanes = re.findall(r"tests/\w+\.py", comment)
-        for lane in lanes:
-            assert os.path.exists(os.path.join(root, lane)), (
-                f"{name}: demotion comment cites missing lane {lane}"
-            )
-        siblings = [
-            tok
-            for tok in re.findall(r"[a-z0-9_]{3,}", comment)
-            if tok in all_names and tok != name
-        ]
-        assert siblings or lanes, (
-            f"{name}: demotion comment names neither a sibling entry "
-            f"nor a tests/ lane: {comment!r}"
-        )
-        if siblings:
-            assert any(s in head for s in siblings), (
-                f"{name}: no named sibling {siblings} is inside the "
-                f"current {DRIVER_WINDOW}-row driver window — the "
-                "rotation invalidated this demotion comment"
-            )
-    assert checked == len(_DEPRIORITIZED), (
-        f"comment audit parsed {checked} entry lines but "
-        f"_DEPRIORITIZED holds {len(_DEPRIORITIZED)} — entry lines "
-        "without a trailing comment are unaudited"
-    )
 
 
 def test_broken_suite_module_raises(monkeypatch):
