@@ -43,11 +43,10 @@ REGISTRY: dict[str, Query] = {}
 # a DIFFERENT entry is invoked: a sequential sweep (the driver's,
 # bench's, or the verify skill's) holds at most one entry's cache at
 # a time instead of leaking one corpus-scale subtree per persisted
-# entry for the session's lifetime. Re-invoking the SAME entry (bench
-# reps) keeps its caches: the fresh persist of the identical plan
-# dedups in Spark's CacheManager, so later reps run warm exactly as
-# the recorded bench artifacts did. bench.py additionally
-# clearCache()es between entries.
+# entry for the session's lifetime. Re-invoking the SAME entry keeps
+# its caches: the fresh persist of the identical plan dedups in
+# Spark's CacheManager. bench.py clearCache()es before every rep, so
+# its reps never read a cache an earlier rep filled.
 _LIVE_PERSISTS: list[DataFrame] = []
 _CURRENT_ENTRY: list[str] = []  # 1-element mutable cell
 # (spark, key, prior value or None) saved by set_conf_tracked

@@ -84,7 +84,7 @@ def _parse_conf_bytes(raw: str) -> int:
     if _re.fullmatch(r"-?[0-9]+", s):
         return int(s, 10) * mult
     print(
-        "ner broadcast gate: unparseable "
+        "broadcast gate: unparseable "
         f"spark.sql.autoBroadcastJoinThreshold {raw!r}; falling "
         "back to the 10 MB built-in default",
         file=sys.stderr,

@@ -24,6 +24,7 @@ from miba_2023_capstone_rb_nlp_spark.functions.numeric import (
     sql_fixed,
 )
 from miba_2023_capstone_rb_nlp_spark.suite import register
+from miba_2023_capstone_rb_nlp_spark.suite.ner import _parse_conf_bytes
 
 
 def _t(spark, sf_dir, name):
@@ -2113,6 +2114,18 @@ def q_min_cost_supplier_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fits_broadcast(spark: SparkSession, df: DataFrame) -> bool:
+    """Plan-time broadcast size guard (no Spark job): the optimizer's
+    sizeInBytes estimate for ``df`` against the session's
+    spark.sql.autoBroadcastJoinThreshold, with Spark's own rule that
+    a negative threshold disables broadcasting."""
+    threshold = _parse_conf_bytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    )
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= int(size) <= threshold
+
+
 # --- TPC-H Q20: suppliers with excess recent shipment share ----------
 # The semi-join-on-correlated-aggregate classic. The synthetic schema
 # has no partsupp/availqty (TESTDATA.md), so "excess" is adapted to a
@@ -2165,24 +2178,22 @@ def q_excess_shipment_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier").join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
-    # r16 (guide §3.2): semi-filter the FACT side with the bounded
-    # 2-of-25-nation supplier keys BEFORE the (suppkey, partkey)
-    # aggregate — the nation predicate is on the aggregate KEY, so it
-    # commutes exactly with the grouping, and the first (and only
-    # corpus-sized) exchange now carries ~8% of the rows. The build
-    # side is the nation-pruned supplier dim (≈8% of suppliers);
-    # broadcast cost grows with SF but stays ~12× smaller than the
-    # shuffle bytes it removes — at extreme SFs gate on size and let
-    # the pushdown lapse rather than shuffle lineitem for the semi.
-    li_elig = li.join(
-        F.broadcast(s.select("s_suppkey")),
-        li["l_suppkey"] == F.col("s_suppkey"),
-        "left_semi",
-    )
+    # Semi-filter the FACT side with the 2-of-25-nation supplier keys
+    # BEFORE the (suppkey, partkey) aggregate: the nation predicate is
+    # on the aggregate KEY, so it commutes exactly with the grouping,
+    # and the only corpus-sized exchange carries ~8% of the rows. The
+    # build side grows with SF, so the pushdown runs only while it
+    # fits the session's broadcast budget; otherwise the aggregate
+    # reads all of lineitem and the final semi-join alone filters.
+    keys = s.select("s_suppkey")
+    if _fits_broadcast(spark, keys):
+        li = li.join(
+            F.broadcast(keys), li["l_suppkey"] == F.col("s_suppkey"), "left_semi"
+        )
     in96 = (
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp")
     ) & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    sp = li_elig.groupBy("l_suppkey", "l_partkey").agg(
+    sp = li.groupBy("l_suppkey", "l_partkey").agg(
         F.sum(F.when(in96, dec("l_quantity", 2, 18))).alias("y96"),
         F.sum(dec("l_quantity", 2, 18)).alias("tot"),
     )

@@ -13,6 +13,7 @@ nothing else changes.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +61,24 @@ class _state_partitions:
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+
+
+@contextlib.contextmanager
+def _no_data_batches_off(spark: SparkSession):
+    """Scope spark.sql.streaming.noDataMicroBatches.enabled=false
+    around a bounded availableNow drain, restoring the prior value.
+    availableNow otherwise ends with a batch of 0 input rows that only
+    advances the watermark; where the drain's output is final after
+    its data batch, that batch is pure cost, and turning it off gives
+    the single batch of the deprecated Trigger.Once with identical
+    rows."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 @register("events_tumbling_streaming", oracle=_TUMBLING_ORACLE)
@@ -129,20 +148,15 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled = read().unionByName(read())
     deduped = doubled.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
     counts = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    with _state_partitions(spark):
+    # one data batch drains the bounded source; a no-data batch would
+    # re-run the complete-mode aggregate over the full dedup state and
+    # rewrite identical rows (see _no_data_batches_off)
+    with _state_partitions(spark), _no_data_batches_off(spark):
         query = (
             counts.writeStream.outputMode("complete")
-            # r16: Trigger.Once — the availableNow finalize batch
-            # (0 input rows) re-ran the complete-mode aggregate over
-            # the full dedup state and rewrote the sink with
-            # identical rows; one batch drains the bounded source.
-            # Verified row-identical at sf0.01/sf0.1; min-of-4
-            # interleaved 1.149 -> 0.832 s. (The cheap-state
-            # complete-mode drains — tumbling, stream-static — were
-            # measured a wash and stay on availableNow.)
             .format("memory")
             .queryName(_DEDUP_TABLE)
-            .trigger(once=True)
+            .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
@@ -266,19 +280,15 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.event_id").alias("view_id"),
         F.col("r.event_id").alias("click_id"),
     )
-    with _state_partitions(spark):
+    # an INNER symmetric-hash join emits every match in the batch that
+    # processes it; a no-data batch would only advance the watermark
+    # and evict state, appending nothing (see _no_data_batches_off)
+    with _state_partitions(spark), _no_data_batches_off(spark):
         query = (
             joined.writeStream.outputMode("append")
-            # r16: Trigger.Once — an INNER symmetric-hash join emits
-            # every match in the batch that processes it; the
-            # availableNow finalize batch (0 input rows) only
-            # advanced the watermark and evicted state, costing a
-            # full extra planning+state-commit round (~30% of the
-            # drain) while appending nothing. Verified: identical 762
-            # rows both ways at sf0.1, exceptAll diff 0.
             .format("memory")
             .queryName(_SSJ_TABLE)
-            .trigger(once=True)
+            .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()

@@ -135,8 +135,8 @@ def test_suite_persists_release_on_next_entry(spark):
     assert len(suite._LIVE_PERSISTS) >= 1
     tracked = list(suite._LIVE_PERSISTS)
     df.count()  # materialize: the caches fill
-    # re-invoking the SAME entry (a bench rep) must NOT release —
-    # the fresh persist dedups in CacheManager and reps run warm
+    # re-invoking the SAME entry must NOT release — the fresh
+    # persist dedups in CacheManager
     SUITE["prefix_jaccard_pairs"].fn(spark, sf)
     assert len(suite._LIVE_PERSISTS) > len(tracked)
     assert all(t.storageLevel.useMemory for t in tracked)

@@ -6,6 +6,8 @@ Checks run on the EXECUTED plan string (AQE final plan) at sf0.001.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -988,6 +990,27 @@ def test_q20_semi_join_single_pair_exchange(spark):
     assert plan.count("FileScan parquet") == 5
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
     assert sum("lineitem" in ln for ln in scans) == 1
+
+
+def test_q20_pushdown_skipped_when_broadcast_disabled(spark):
+    """Q20's supplier-key pushdown is size-guarded: with
+    auto-broadcast disabled (-1) the fact side is aggregated
+    unfiltered (one LeftSemi, the final one) and the rows match the
+    default plan's. Rows compared at sf0.01, where the result is not
+    empty."""
+    sf_dir = os.path.join(os.path.dirname(SF_TEST_DIR), "sf0.01")
+    fn = SUITE["excess_shipment_q20"].fn
+    default_rows = sorted(fn(spark, sf_dir).collect())
+    assert default_rows
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        df = fn(spark, sf_dir)
+        assert _executed_plan_nocollect(df).count("LeftSemi") == 1
+        assert sorted(df.collect()) == default_rows
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_q22_anti_join_and_scalar_broadcast(spark):

@@ -241,3 +241,38 @@ def test_drop_duplicates_within_watermark_semantics(spark, tmp_path):
         for r in out.groupBy("rid").agg(F.count("*").alias("n")).collect()
     }
     assert counts == {"a": 2, "b": 1}
+
+
+@pytest.mark.parametrize(
+    "name", ["events_stream_dedup", "events_stream_stream_join"]
+)
+def test_bounded_drain_runs_one_batch(spark, monkeypatch, name):
+    """The two bounded drains run availableNow with no-data batches
+    off: exactly one micro-batch, the same rows as the DuckDB oracle,
+    and the session's no-data-batch setting restored afterwards."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from miba_2023_capstone_rb_nlp_spark.suite import load_suite
+    from tests.parity import compare, duckdb_conn
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prior = spark.conf.get(key)
+    q = load_suite()[name]
+    df = q.fn(spark, SF_TEST_DIR)
+    assert spark.conf.get(key) == prior
+    [query] = started
+    assert len(query.recentProgress) == 1
+    assert query.recentProgress[0]["numInputRows"] > 0
+    con = duckdb_conn(SF_TEST_DIR)
+    try:
+        compare(df, con.execute(q.oracle).df(), name)
+    finally:
+        con.close()
