@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from miba_2023_capstone_rb_nlp_spark.functions.blas import (
     cos_matrix,
     fixed_np,
-    seq_plane_dots,
+    seq_dot_matrix,
     to_matrix,
 )
 
@@ -184,7 +184,7 @@ def hyperplane_entries(
     def emit(batches):
         for pdf in batches:
             mat = to_matrix(pdf["_v"], dim)
-            dots = seq_plane_dots(mat, weights)
+            dots = seq_dot_matrix(mat, weights)
             ids = pdf["_id"].to_numpy()
             out_id, out_band, out_bucket, out_prim = [], [], [], []
             for band in range(n_bands):

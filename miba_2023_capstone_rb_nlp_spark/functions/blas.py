@@ -70,11 +70,3 @@ def fixed_np(x: np.ndarray, scale: int) -> np.ndarray:
     factor = float(10**scale)
     return np.floor(x * factor) / factor
 
-
-def seq_plane_dots(v: np.ndarray, w: np.ndarray) -> np.ndarray:
-    """(n,d) vectors × (p,d) hyperplanes → (n,p) dots, sequential
-    fold over d (bit-identical to the per-plane expression chain)."""
-    out = np.zeros((v.shape[0], w.shape[0]), dtype=np.float64)
-    for d in range(v.shape[1]):
-        out += np.multiply.outer(v[:, d], w[:, d])
-    return out

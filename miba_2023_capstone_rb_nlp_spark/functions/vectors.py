@@ -1,11 +1,9 @@
 """Vector math over ``array<float>``/``array<double>`` columns as pure
-Catalyst expressions (``aggregate``/``zip_with``/``transform``) — no
-Python UDFs, so the hot path stays inside whole-stage codegen.
+Catalyst expressions (``aggregate``/``zip_with``) — no Python UDFs, so
+the hot path stays inside whole-stage codegen.
 
 Reference parity: euclidean distance is the medoid metric
-(reference ``word_wizard.py:733,744``); cosine backs the added
-similarity-search/near-dup operators (engine additions, SURVEY §7
-phase 6).
+(reference ``word_wizard.py:733,744``).
 """
 
 from __future__ import annotations
@@ -20,25 +18,6 @@ def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-order dot product in double precision."""
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm2(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; null-safe on zero vectors (returns NULL)."""
-    denom = norm2(a) * norm2(b)
-    return F.when(denom != 0.0, dot(a, b) / denom)
-
-
 def euclidean(a: Column, b: Column) -> Column:
     """Euclidean distance (reference medoid metric, word_wizard.py:733)."""
     return F.sqrt(
@@ -48,33 +27,3 @@ def euclidean(a: Column, b: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def scale(vec: Column, factor: Column) -> Column:
-    return F.transform(as_double(vec), lambda x: x * factor)
-
-
-# --- expanded (known-dim) variants ---------------------------------
-# Higher-order array functions (zip_with/aggregate) cost a lambda call
-# per element per row; when the dimension is known at plan time, a
-# literal chain of products compiles to straight-line whole-stage
-# codegen arithmetic (~10× faster in the pair-join hot path) and is
-# bit-identical: aggregate folds ((0+p0)+p1)+… and the literal chain
-# evaluates (p0+p1)+p2… with 0.0+p0 ≡ p0.
-
-
-def dot_expanded(a: Column, b: Column, dim: int) -> Column:
-    # per-ELEMENT double casts: getItem on a cast(array<double>) column
-    # re-casts the whole array per access (O(dim²) per row); indexing
-    # the raw array and widening the scalar is bit-identical and O(dim)
-    def at(v: Column, i: int) -> Column:
-        return v.getItem(i).cast("double")
-
-    out = at(a, 0) * at(b, 0)
-    for i in range(1, dim):
-        out = out + at(a, i) * at(b, i)
-    return out
-
-
-def norm2_expanded(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_expanded(a, a, dim))

@@ -41,6 +41,10 @@ from miba_2023_capstone_rb_nlp_spark.functions.blas import (
 # the deployment's driver memory justifies it.
 DEFAULT_MAX_QUERY_ROWS = 100_000
 
+# Cosine scores are floored to 6 decimals before ranking, so ties and
+# the oracles' ``floor(cos * 1e6) / 1e6`` agree bit for bit.
+COS_SCALE = 6
+
 
 def _collect_queries(
     queries: DataFrame, cols: list, max_query_rows: int | None, caller: str
@@ -95,6 +99,44 @@ def _topk_frame(
     return pd.concat(out, ignore_index=True)
 
 
+def _scan_topk(
+    corpus: DataFrame,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    k: int,
+    excluded,
+) -> DataFrame:
+    """→ [query_id, neighbor_id, cos, rk ≤ k] for the collected
+    queries: one mapInPandas per-batch partial top-k (the combiner
+    described above), then one (cos desc, neighbor_id asc) window.
+    ``excluded(pdf, nids)`` is the batch's (nq, nc) mask of pairs to
+    drop — each variant differs only in this mask."""
+
+    def score(batches):
+        for pdf in batches:
+            nids = pdf[id_col].to_numpy()
+            cos = fixed_np(
+                cos_matrix(qmat, to_matrix(pdf[vec_col], dim)), COS_SCALE
+            )
+            cos[excluded(pdf, nids)] = np.nan
+            yield _topk_frame(qids, nids, cos, k)
+
+    partial = corpus.mapInPandas(
+        score, schema="query_id bigint, neighbor_id bigint, cos double"
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        partial.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "cos", "rk")
+    )
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -102,7 +144,6 @@ def knn_bruteforce(
     id_col: str,
     dim: int,
     k: int = 10,
-    scale: int = 6,
     max_query_rows: int | None = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """→ [query_id, neighbor_id, cos, rk ≤ k] (self excluded).
@@ -120,26 +161,9 @@ def knn_bruteforce(
         "knn_bruteforce",
     )
     qids = qpd["qid"].to_numpy()
-    qmat = to_matrix(qpd["qv"], dim)
-
-    def score(batches):
-        for pdf in batches:
-            nids = pdf[id_col].to_numpy()
-            cmat = to_matrix(pdf[vec_col], dim)
-            cos = fixed_np(cos_matrix(qmat, cmat), scale)
-            cos[qids[:, None] == nids[None, :]] = np.nan  # self-exclude
-            yield _topk_frame(qids, nids, cos, k)
-
-    partial = corpus.mapInPandas(
-        score, schema="query_id bigint, neighbor_id bigint, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
+    return _scan_topk(
+        corpus, qids, to_matrix(qpd["qv"], dim), vec_col, id_col, dim, k,
+        lambda pdf, nids: qids[:, None] == nids[None, :],  # self
     )
 
 
@@ -151,7 +175,6 @@ def knn_ivf_cells(
     cell_col: str,
     dim: int,
     k: int = 10,
-    scale: int = 6,
     max_query_rows: int | None = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """IVF-style: only score candidates in the query's cell.
@@ -179,7 +202,9 @@ def knn_ivf_cells(
         cell = int(key[0])
         qids, qmat = by_cell[cell]
         nids = pdf[id_col].to_numpy()
-        cos = fixed_np(cos_matrix(qmat, to_matrix(pdf[vec_col], dim)), scale)
+        cos = fixed_np(
+            cos_matrix(qmat, to_matrix(pdf[vec_col], dim)), COS_SCALE
+        )
         cos[qids[:, None] == nids[None, :]] = np.nan
         out = _topk_frame(qids, nids, cos, k, with_rank=True)
         out.insert(1, "cell", np.full(len(out), cell))
@@ -207,7 +232,6 @@ def knn_ivf_multiprobe(
     dim: int,
     k: int = 10,
     nprobe: int = 2,
-    scale: int = 6,
     max_query_rows: int | None = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """IVF with multi-probe: rank cells by query→centroid cosine and
@@ -244,7 +268,7 @@ def knn_ivf_multiprobe(
     qmat = to_matrix(qpd["qv"], dim)
 
     # rank cells per query: cos desc, cell asc; NaN (zero-norm) last
-    qc = fixed_np(cos_matrix(qmat, cmat), scale)
+    qc = fixed_np(cos_matrix(qmat, cmat), COS_SCALE)
     probe_cells = np.empty((len(qids), nprobe), dtype=cells.dtype)
     for qi in range(len(qids)):
         row = qc[qi]
@@ -257,26 +281,14 @@ def knn_ivf_multiprobe(
 
     probed = sorted({int(c) for c in probe_cells.ravel() if c != -1})
 
-    def score(batches):
-        for pdf in batches:
-            nids = pdf[id_col].to_numpy()
-            ncells = pdf[cell_col].to_numpy()
-            cos = fixed_np(cos_matrix(qmat, to_matrix(pdf[vec_col], dim)), scale)
-            allowed = (ncells[None, :, None] == probe_cells[:, None, :]).any(-1)
-            cos[~allowed] = np.nan
-            cos[qids[:, None] == nids[None, :]] = np.nan  # self-exclude
-            yield _topk_frame(qids, nids, cos, k)
+    def excluded(pdf, nids):
+        ncells = pdf[cell_col].to_numpy()
+        probed_here = (ncells[None, :, None] == probe_cells[:, None, :]).any(-1)
+        return ~probed_here | (qids[:, None] == nids[None, :])
 
-    partial = corpus.filter(F.col(cell_col).isin(probed)).mapInPandas(
-        score, schema="query_id bigint, neighbor_id bigint, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
+    return _scan_topk(
+        corpus.filter(F.col(cell_col).isin(probed)),
+        qids, qmat, vec_col, id_col, dim, k, excluded,
     )
 
 
@@ -301,7 +313,6 @@ def knn_int8_rerank(
     dim: int,
     k: int = 10,
     n_candidates: int = 25,
-    scale: int = 6,
     max_query_rows: int | None = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Quantized candidate generation + exact re-rank — the memory-
@@ -354,7 +365,7 @@ def knn_int8_rerank(
                 # exact cosine only for emitted candidates
                 sel_mat = cmat[keep][order]
                 cos = fixed_np(
-                    cos_matrix(qmat[qi : qi + 1], sel_mat)[0], scale
+                    cos_matrix(qmat[qi : qi + 1], sel_mat)[0], COS_SCALE
                 )
                 rows["query_id"].extend([qids[qi]] * len(order))
                 rows["neighbor_id"].extend(sel_ids)
@@ -390,7 +401,6 @@ def knn_hard_negatives(
     group_col: str,
     dim: int,
     k: int = 5,
-    scale: int = 6,
     max_query_rows: int | None = DEFAULT_MAX_QUERY_ROWS,
 ) -> DataFrame:
     """→ [query_id, neighbor_id, cos, rk ≤ k]: for each query, the
@@ -398,13 +408,10 @@ def knn_hard_negatives(
     hard-negative mining (the negatives that sit closest to the
     decision boundary are the ones worth training on).
 
-    Same distributed shape as knn_bruteforce (bounded query broadcast,
-    per-batch partial top-k, one window reduce); the same-group mask
-    replaces the self-mask — it subsumes it, since a vector shares its
-    own group.
+    Same scan as knn_bruteforce; the same-group mask replaces the
+    self-mask — it subsumes it, since a vector shares its own group.
 
-    NULL-group rows are dropped from BOTH sides before scoring
-    (ADVICE r8 #2): SQL's ``corpus.group <> query.group`` predicate is
+    NULL-group rows are dropped from BOTH sides before scoring: SQL's ``corpus.group <> query.group`` predicate is
     NULL (→ excluded) whenever either label is NULL, while a numpy
     equality mask would keep a None-vs-value pair — pre-filtering both
     sides makes the distributed path match the oracle exactly even if
@@ -419,27 +426,10 @@ def knn_hard_negatives(
         max_query_rows,
         "knn_hard_negatives",
     )
-    corpus = corpus.filter(F.col(group_col).isNotNull())
-    qids = qpd["qid"].to_numpy()
     qgrp = qpd["qg"].to_numpy()
-    qmat = to_matrix(qpd["qv"], dim)
-
-    def score(batches):
-        for pdf in batches:
-            nids = pdf[id_col].to_numpy()
-            ngrp = pdf[group_col].to_numpy()
-            cos = fixed_np(cos_matrix(qmat, to_matrix(pdf[vec_col], dim)), scale)
-            cos[qgrp[:, None] == ngrp[None, :]] = np.nan  # same group out
-            yield _topk_frame(qids, nids, cos, k)
-
-    partial = corpus.mapInPandas(
-        score, schema="query_id bigint, neighbor_id bigint, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
+    return _scan_topk(
+        corpus.filter(F.col(group_col).isNotNull()),
+        qpd["qid"].to_numpy(), to_matrix(qpd["qv"], dim),
+        vec_col, id_col, dim, k,
+        lambda pdf, nids: qgrp[:, None] == pdf[group_col].to_numpy()[None, :],
     )

@@ -391,9 +391,7 @@ def q_dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the min-doc_id representative of each group, carrying how
     many near-dups it absorbed.
 
-    This is the star variant's oracle-checked driver entry (the
-    propagation variant backs ``neardup_components``); both are
-    O(log²n)-vs-O(diameter) documented in dedup/components.py. The
+    It shares the components kernel with ``neardup_components``. The
     final representative join is a plain equi-join on doc_id — group
     count ≈ corpus size, so no broadcast assumption."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (

@@ -214,11 +214,11 @@ JOIN (SELECT component, count(*) AS comp_size FROM comp GROUP BY component) s
 @register("neardup_components", oracle=_CC_ORACLE)
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate GROUPS from the n-gram-Jaccard pair graph: distributed
-    min-label propagation (dedup/components.py) vs a recursive-CTE
-    oracle. component = min doc_id of the group; every doc appears
-    (isolated docs form singleton components)."""
+    large-star/small-star components (dedup/components.py) vs a
+    recursive-CTE oracle. component = min doc_id of the group; every
+    doc appears (isolated docs form singleton components)."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components,
+        connected_components_star,
     )
 
     docs = _docs(spark, sf_dir)
@@ -229,8 +229,9 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and tests/test_knn_guard.py
         docs, "text", "doc_id", n=3, threshold=0.1, candidate_budget=None
     )
-    comp = connected_components(
-        docs.select("doc_id"), edges, id_col="doc_id", src="da", dst="db"
+    comp = connected_components_star(
+        docs.select("doc_id"), edges, id_col="doc_id", src="da", dst="db",
+        canonical=True,  # jaccard_pairs emits distinct da < db groups
     )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("comp_size"))
     return comp.join(sizes, "component", "inner").select(

@@ -869,27 +869,24 @@ def q_events_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- multi-format source round-trip (JSON lines) --------------------
+# --- at-rest format round-trips (JSON / CSV / ORC / XML) ------------
 # Format breadth beyond the parquet catalog: the engine must ingest
-# the schema-on-read formats a real lake carries. The entry writes
-# events as JSON lines once (the at-rest copy), reads it back with an
+# the schema-on-read formats a real lake carries. Each entry writes
+# events in one format once (the at-rest copy), reads it back with an
 # EXPLICIT schema (never inference — an inference pass is a full
 # extra scan at 100 TB and can widen types between batches), and the
 # aggregate must equal the same aggregate over the parquet original —
-# proving the text round-trip loses nothing (doubles survive via
-# round-trip-safe formatting). Registered round 6 with local parity;
-# window debut planned round 7.
+# proving the crossing loses nothing (doubles survive via
+# round-trip-safe formatting).
 #
-# ONE shared fingerprint (r8 review #4): the four at-rest formats
-# (JSON/CSV/ORC/XML) intentionally run the SAME aggregate against
-# the SAME oracle text, built here once so a fingerprint fix cannot
-# silently apply to one copy and leave the others stale. The
-# `extrema` variant adds raw per-group min/max doubles — a bit-exact
-# witness pair per group (sum_value alone quantizes to DECIMAL(18,2),
-# which would hide sub-cent formatting drift). The crafted-corpus
-# lossless test (tests/test_roundtrip_formats.py) covers what no
-# aggregate over this synthetic data can: NULL keys, quote/entity
-# escaping, and full-precision doubles compared value-by-value.
+# All four formats run the SAME aggregate against the SAME oracle
+# text, built here once. The `extrema` variant adds raw per-group
+# min/max doubles — a bit-exact witness pair per group (sum_value
+# alone quantizes to DECIMAL(18,2), which would hide sub-cent
+# formatting drift). The crafted-corpus lossless test
+# (tests/test_roundtrip_formats.py) covers what no aggregate over
+# this synthetic data can: NULL keys, quote/entity escaping, and
+# full-precision doubles compared value-by-value.
 
 
 def _rt_oracle(extrema: bool = False) -> str:
@@ -922,158 +919,81 @@ def _rt_aggregate(back: DataFrame, extrema: bool = False) -> DataFrame:
     return back.groupBy("event_type").agg(*aggs)
 
 
-_JSON_RT_ORACLE = _rt_oracle()
+def _roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    extrema: bool = False,
+    options: dict | None = None,
+    write_options: dict | None = None,
+) -> DataFrame:
+    """events → ``fmt`` at rest → explicit-schema read → aggregate.
 
-
-@register("events_json_roundtrip", oracle=_JSON_RT_ORACLE)
-def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → JSON lines at rest → schema-on-read aggregate.
-
-    Plan: one parquet scan to lay the JSON copy (pruned to the three
-    needed columns BEFORE serialization — writing unread columns into
-    a text format is pure waste), then the JSON scan feeds a plain
-    partial-agg groupBy. The explicit read schema keeps the scan a
-    single pass; at scale the JSON copy is the upstream reality (logs,
-    API dumps), not something the engine writes itself.
-    """
-    import os
-
-    from miba_2023_capstone_rb_nlp_spark.catalog import warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir(
-        "json_events", os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    )
-    ev.write.mode("overwrite").json(path)
-    back = spark.read.schema(
-        "event_type string, user_id bigint, value double"
-    ).json(path)
-    return _rt_aggregate(back)
-
-
-# --- CSV source round-trip (schema-on-read, no inference) ------------
-# Same fingerprint aggregate as the JSON round-trip, so the check is
-# that the CSV text format — quoting, nulls-as-empty, full-precision
-# float repr — preserves the data exactly, per column type.
-_CSV_RT_ORACLE = _rt_oracle()
-
-
-@register("events_csv_roundtrip", oracle=_CSV_RT_ORACLE)
-def q_events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → CSV at rest (header, explicit quote/escape) →
-    EXPLICIT-schema read → aggregate; the oracle aggregates the
-    ORIGINAL parquet, so the entry proves the text round-trip is
-    lossless for every column type crossing it (strings with the
-    quote character, nullable bigints, full-precision doubles).
-
-    Plan: column-pruned before serialization (unread columns in a
-    text format are pure waste); the read pins an explicit schema so
-    the scan is ONE pass — schema inference on CSV costs a full extra
-    pass over the data at 100 TB, the classic silent 2× read. At
-    scale CSV is the upstream reality (exports, legacy feeds); the
-    engine's job is to cross it once and land columnar."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("csv_events", sf_name(sf_dir))
+    Pruned to the three needed columns BEFORE serialization (unread
+    columns in a text format are pure waste). ``options`` apply to the
+    write and the read, ``write_options`` to the write only. The copy
+    is keyed by ``sf_name``, so two scale-factor directories sharing a
+    basename never overwrite each other's files under a built plan."""
+    options = options or {}
+    path = catalog.warehouse_dir(f"{fmt}_events", catalog.sf_name(sf_dir))
     (
-        ev.write.mode("overwrite")
-        .options(header=True, quote='"', escape='"')
-        .csv(path)
-    )
-    back = (
-        spark.read.schema("event_type string, user_id bigint, value double")
-        .options(header=True, quote='"', escape='"')
-        .csv(path)
-    )
-    return _rt_aggregate(back)
-
-
-# --- ORC source round-trip (columnar at rest, schema pinned) ---------
-# Same fingerprint aggregate as the JSON/CSV round-trips: the entry
-# proves the engine can land and re-read the other mainstream
-# columnar format losslessly. ORC carries its own schema, but the
-# read still PINS one explicitly — a pipeline that trusts file-embedded
-# schemas silently widens/narrows when an upstream writer drifts.
-_ORC_RT_ORACLE = _rt_oracle(extrema=True)
-
-
-@register("events_orc_roundtrip", oracle=_ORC_RT_ORACLE)
-def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → ORC at rest → explicit-schema read → aggregate; the
-    oracle aggregates the ORIGINAL parquet. The extrema variant adds
-    raw per-group min/max doubles — bit-exact witnesses that the
-    quantized sum alone could not provide; the value-by-value
-    lossless proof (incl. NULLs) is the crafted-corpus test in
-    tests/test_roundtrip_formats.py.
-
-    Plan: column-pruned before serialization; the ORC scan is
-    columnar + vectorized like parquet (predicate pushdown and column
-    pruning both apply), so at 100 TB the only cost of the format
-    hop is the rewrite itself — reads stay scan-equivalent."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("orc_events", sf_name(sf_dir))
-    ev.write.mode("overwrite").orc(path)
-    back = spark.read.schema(
-        "event_type string, user_id bigint, value double"
-    ).orc(path)
-    return _rt_aggregate(back, extrema=True)
-
-
-# --- XML source round-trip (schema-on-read, no inference) ------------
-# Spark 4 ships the XML source natively. XML is the worst-case text
-# format (tags per value, entity escaping, absent-element nulls);
-# the shared fingerprint + extrema aggregate checks the crossing on
-# the synthetic corpus, the crafted-corpus test covers the escaping/
-# NULL paths this data never hits, and the explicit schema keeps the
-# read ONE pass exactly like the CSV/JSON twins (XML schema
-# inference is another full scan).
-_XML_RT_ORACLE = _rt_oracle(extrema=True)
-
-
-@register("events_xml_roundtrip", oracle=_XML_RT_ORACLE)
-def q_events_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → XML at rest (rowTag per event) → EXPLICIT-schema read
-    → aggregate; the oracle aggregates the ORIGINAL parquet. What
-    THIS entry proves on the synthetic data: counts, distinct keys,
-    cent-exact totals, and bit-exact per-group min/max doubles
-    survive the crossing. What it cannot exercise here (the events
-    table has no NULL user_ids and no escapable characters) — NULL
-    keys as absent elements, entity escaping, value-by-value double
-    identity — is pinned by the crafted-corpus test in
-    tests/test_roundtrip_formats.py.
-
-    Plan: pruned to the three needed columns before serialization
-    (XML's per-value tag overhead makes unread columns even more
-    expensive than in CSV); explicit schema = ONE pass."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("xml_events", sf_name(sf_dir))
-    (
-        ev.write.mode("overwrite")
-        .option("rootTag", "events")
-        .option("rowTag", "event")
-        .format("xml")
+        _events(spark, sf_dir)
+        .select("event_type", "user_id", "value")
+        .write.mode("overwrite")
+        .format(fmt)
+        .options(**options, **(write_options or {}))
         .save(path)
     )
     back = (
         spark.read.schema("event_type string, user_id bigint, value double")
-        .option("rowTag", "event")
-        .format("xml")
+        .format(fmt)
+        .options(**options)
         .load(path)
     )
-    return _rt_aggregate(back, extrema=True)
+    return _rt_aggregate(back, extrema)
+
+
+@register("events_json_roundtrip", oracle=_rt_oracle())
+def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → JSON lines at rest → schema-on-read aggregate. At
+    scale the JSON copy is the upstream reality (logs, API dumps), not
+    something the engine writes itself."""
+    return _roundtrip(spark, sf_dir, "json")
+
+
+@register("events_csv_roundtrip", oracle=_rt_oracle())
+def q_events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → CSV at rest (header, explicit quote/escape) → aggregate:
+    quoting, nulls-as-empty and full-precision float repr must
+    preserve every column type. Schema inference on CSV would cost a
+    full extra pass — the classic silent 2× read."""
+    return _roundtrip(
+        spark, sf_dir, "csv", options={"header": True, "quote": '"', "escape": '"'}
+    )
+
+
+@register("events_orc_roundtrip", oracle=_rt_oracle(extrema=True))
+def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → ORC at rest → aggregate with per-group min/max. ORC
+    carries its own schema, but the read still pins one: a pipeline
+    that trusts file-embedded schemas silently widens/narrows when an
+    upstream writer drifts. The scan is columnar + vectorized like
+    parquet, so the format hop costs only the rewrite."""
+    return _roundtrip(spark, sf_dir, "orc", extrema=True)
+
+
+@register("events_xml_roundtrip", oracle=_rt_oracle(extrema=True))
+def q_events_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → XML at rest (rowTag per event) → aggregate with
+    per-group min/max. XML is the worst-case text format (tags per
+    value, entity escaping, absent-element nulls); Spark 4 ships the
+    source natively, and XML schema inference is another full scan."""
+    return _roundtrip(
+        spark, sf_dir, "xml",
+        extrema=True,
+        options={"rowTag": "event"},
+        write_options={"rootTag": "events"},
+    )
 
 
 # --- VariantType semi-structured extraction --------------------------

@@ -53,8 +53,7 @@ def q_custom_pysource_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     so through the conf-free base reader (no ``pushdown`` option):
     a pushFilters-implementing reader requires
     spark.sql.python.filterPushdown.enabled at EXECUTION time, which
-    would couple this entry's lazy plan to session-conf lifetime
-    (review r9 finding #1)."""
+    would couple this entry's lazy plan to session-conf lifetime."""
     spark.dataSource.register(SeededLinksDataSource)
     df = (
         spark.read.format("seeded_links")

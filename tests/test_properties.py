@@ -22,7 +22,6 @@ from miba_2023_capstone_rb_nlp_spark.functions.blas import (
     fixed_np,
     seq_dot_matrix,
     seq_norm,
-    seq_plane_dots,
     to_matrix,
 )
 
@@ -82,10 +81,12 @@ def test_cos_matrix_matches_scalar_formula(data):
 @given(data=st.data())
 @settings(max_examples=100, deadline=None)
 def test_plane_dots_fold_order(data):
+    """Hyperplane projections: float32-widened vectors against
+    float64 plane weights, same sequential fold."""
     d = data.draw(DIM)
     v = np.array(data.draw(vec(d)), dtype=np.float32).astype(np.float64)
     w = np.array(data.draw(vec(d)), dtype=np.float64)
-    got = seq_plane_dots(v[None, :], w[None, :])[0, 0]
+    got = seq_dot_matrix(v[None, :], w[None, :])[0, 0]
     acc = 0.0
     for i in range(d):
         acc += v[i] * w[i]
@@ -123,17 +124,17 @@ def test_to_matrix_empty_and_shapes():
 
 
 def test_connected_components_long_chain_and_isolates(spark):
-    """A 12-node path graph (needs ~11 propagation rounds — stresses
-    the iteration/convergence logic, unlike the shallow near-dup
-    fixtures) plus isolated vertices."""
+    """A 12-node path graph (a longer diameter than the shallow
+    near-dup fixtures have — stresses the iteration/convergence
+    logic) plus isolated vertices."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components,
+        connected_components_star,
     )
 
     verts = spark.range(0, 15).withColumnRenamed("id", "doc_id")
     chain = [(i, i + 1) for i in range(11)]  # 0-11 one path
     edges = spark.createDataFrame(chain + [(13, 14)], "da bigint, db bigint")
-    out = connected_components(verts, edges, "doc_id", "da", "db", max_iter=20)
+    out = connected_components_star(verts, edges, "doc_id", "da", "db")
     got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert all(got[i] == 0 for i in range(12))
     assert got[12] == 12 and got[13] == 13 and got[14] == 13
@@ -141,7 +142,8 @@ def test_connected_components_long_chain_and_isolates(spark):
 
 def test_star_components_path_1000(spark):
     """Large-star/small-star must crack a 1000-node path graph within
-    ~12 rounds (propagation would need 999) — the O(log² n) claim."""
+    ~12 rounds (label propagation would need 999) — the O(log² n)
+    claim."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
         connected_components_star,
     )
@@ -158,26 +160,37 @@ def test_star_components_path_1000(spark):
     assert out.count() == 1000
 
 
-def test_star_components_match_propagation(spark):
-    """Both algorithms agree on a multi-component graph with isolates,
-    duplicate and reversed edges, and self-loops."""
+def test_star_components_match_union_find(spark):
+    """Components on a multi-component graph with isolates, duplicate
+    and reversed edges, and a self-loop equal a plain-Python
+    union-find's, labelled by each component's min vertex."""
     import random
 
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components,
         connected_components_star,
     )
 
     rng = random.Random(11)
     edges_py = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
     edges_py += [(5, 5), (10, 3), (3, 10)]  # self-loop + reversed dup
+    parent = list(range(100))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges_py:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the min id
+    want = sorted((v, find(v)) for v in range(100))
+
     verts = spark.range(0, 100).withColumnRenamed("id", "doc_id")
     edges = spark.createDataFrame(edges_py, "da bigint, db bigint")
-    a = connected_components(verts, edges, "doc_id", "da", "db", max_iter=30)
-    b = connected_components_star(verts, edges, "doc_id", "da", "db")
-    ga = sorted((r["doc_id"], r["component"]) for r in a.collect())
-    gb = sorted((r["doc_id"], r["component"]) for r in b.collect())
-    assert ga == gb
+    out = connected_components_star(verts, edges, "doc_id", "da", "db")
+    got = sorted((r["doc_id"], r["component"]) for r in out.collect())
+    assert got == want
 
 
 @given(

@@ -98,3 +98,40 @@ def test_xml_roundtrip_lossless(spark, corpus, tmp_path):
         .format("xml").load(p)
     )
     _assert_lossless(spark, corpus, back)
+
+
+@pytest.mark.parametrize("fmt", ["json", "csv", "orc", "xml"])
+def test_roundtrip_entry_copy_keyed_per_sf_dir(spark, tmp_path, fmt):
+    """Two scale-factor directories sharing a basename get separate
+    at-rest copies: building the entry for b must not replace the
+    files that a's already-built plan reads."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from tests.conftest import SF_TEST_DIR
+
+    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
+    from miba_2023_capstone_rb_nlp_spark.suite import load_suite
+
+    src = os.path.join(SF_TEST_DIR, "events.parquet")
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    a.mkdir(parents=True)
+    b.mkdir(parents=True)
+    shutil.copy(src, a / "events.parquet")
+    events = pq.read_table(src)
+    one_type = pc.equal(events["event_type"], events["event_type"][0])
+    pq.write_table(events.filter(one_type), b / "events.parquet")
+
+    entry = load_suite()[f"events_{fmt}_roundtrip"].fn
+    try:
+        alone = sorted(entry(spark, str(a)).collect())
+        df_a = entry(spark, str(a))
+        entry(spark, str(b))
+        assert sorted(df_a.collect()) == alone
+    finally:
+        for d in (a, b):
+            shutil.rmtree(
+                warehouse_dir(f"{fmt}_events", sf_name(str(d))),
+                ignore_errors=True,
+            )

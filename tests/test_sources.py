@@ -372,38 +372,11 @@ class TestPythonDataSource:
             assert rows("true") == rows("false") and rows("true")
 
 
-def test_tracked_conf_restored_on_next_entry(spark):
-    """set_conf_tracked lifecycle (ADVICE r8 #1): a conf tracked
-    during one entry's build stays set until a DIFFERENT registry
-    entry is invoked — the same release point as tracked persists —
-    then restores to its prior value."""
-    from tests.conftest import SF_TEST_DIR
-
-    from miba_2023_capstone_rb_nlp_spark.suite import (
-        load_suite,
-        set_conf_tracked,
-    )
-
-    suite = load_suite()
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key)
-    assert prior != "1234"
-    # simulate an entry builder tracking a conf mid-build: enter the
-    # entry's lifecycle scope first (the wrapped fn sets the current-
-    # entry cell), then track
-    df = suite["custom_pysource_links"].fn(spark, SF_TEST_DIR)
-    set_conf_tracked(spark, key, "1234")
-    assert spark.conf.get(key) == "1234"  # held for the lazy plan
-    assert df.count() > 0  # materializes while the conf is held
-    suite["exact_dedup"].fn(spark, SF_TEST_DIR)
-    assert spark.conf.get(key) == prior  # released with the entry
-
-
 def test_pysource_entry_plan_survives_deferred_execution(spark):
-    """Review r9 finding #1: building the connector entry's plan,
-    invoking another entry (which releases tracked state), and only
-    THEN materializing must work — the entry's reader is conf-free,
-    so the deferred plan depends on no session state."""
+    """Building the connector entry's plan, invoking another entry
+    (which releases tracked state), and only THEN materializing must
+    work — the entry's reader is conf-free, so the deferred plan
+    depends on no session state."""
     from tests.conftest import SF_TEST_DIR
 
     from miba_2023_capstone_rb_nlp_spark.suite import load_suite
